@@ -4,8 +4,14 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge
 import org.apache.spark.sql.types._
 
 /** Minimal log-backed table format: ACID-on-parquet via an ordered
@@ -52,6 +58,18 @@ import org.apache.spark.sql.types._
   *      write-schema epochs) — files written under any earlier schema
   *      resolve by id on every batch read path, so a rename at 100 TB
   *      rewrites nothing.
+  *   8. THE LOG IS THE LISTING: scans take their file set and schema
+  *      from the snapshot, and never list or infer ([[scanFiles]]). A
+  *      read or an idempotent append therefore launches no listing or
+  *      schema-inference job at any file count; an un-evolved table's
+  *      schema is one data file's footer, memoized per file identity.
+  *      Cost caveat: the driver stats each scanned file once per scan
+  *      plan (O(files) metadata calls — cheap on a local or HDFS
+  *      namespace, a round-trip each on an object store). Recording
+  *      file sizes in the add action, the published formats' answer,
+  *      is out of scope. Two reads still list: `mergeSchema` reads of
+  *      additively evolved tables, and deletion-vector directories,
+  *      which the log names by directory, not by file.
   *
   * Deliberately out of scope (documented, not faked): multi-table
   * transactions. One streaming caveat: a subscription started on a
@@ -480,6 +498,69 @@ object TxLog {
     }.reduce(_ unionByName _)
   }
 
+  /** A FileIndex over exactly the files a snapshot names — the log is
+    * the listing. Spark's own index would re-discover them (above 32
+    * paths a distributed listing job, one empty task per file). The
+    * driver stats each file once, when the planner first asks; a live
+    * file that has gone missing fails the query loudly, since nothing
+    * lists the directory to notice the gap otherwise. */
+  private final case class LogFileIndex(rootPaths: Seq[Path])(
+      conf: Configuration) extends FileIndex {
+    private lazy val statuses: Array[FileStatus] =
+      rootPaths.map(statLive(conf, _)).toArray
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, statuses))
+    def inputFiles: Array[String] = statuses.map(_.getPath.toString)
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = statuses.iterator.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+  }
+
+  private def statLive(conf: Configuration, p: Path): FileStatus =
+    try p.getFileSystem(conf).getFileStatus(p)
+    catch {
+      case e: java.io.FileNotFoundException =>
+        throw new IllegalStateException(
+          s"TxLog: live data file $p is missing — the snapshot names it, " +
+            "so the read fails instead of returning the other files' rows", e)
+    }
+
+  /** Scan exactly `paths` (log keys of `table`) under `schema`, default
+    * the footer schema of the first of them — what `spark.read.parquet`
+    * infers without mergeSchema, minus its listing and inference jobs.
+    * Callers pass paths that share one physical schema (an un-evolved
+    * table, or one write-schema epoch of a mapped table). */
+  private def scanFiles(spark: SparkSession, table: String,
+                        paths: Seq[String],
+                        schema: Option[StructType] = None): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val abs = paths.map(p => new Path(new File(table, p).getAbsolutePath))
+    SqlBridge.parquetScan(spark, LogFileIndex(abs)(conf),
+      schema.getOrElse(footerSchema(spark, statLive(conf, abs.head))))
+  }
+
+  // Footer schemas, memoized per data-file identity: path + length +
+  // mtime. Data files are write-once under UUID-named dirs, and a table
+  // deleted and recreated at the same path writes new files, so a key
+  // can never be reused across incarnations. Bounded like replayCache.
+  private val footerCache =
+    scala.collection.concurrent.TrieMap[(String, Long, Long), StructType]()
+
+  private def footerSchema(spark: SparkSession, f: FileStatus): StructType =
+    footerCache.getOrElseUpdate(
+      (f.getPath.toString, f.getLen, f.getModificationTime), {
+        if (footerCache.size > 256) footerCache.clear()
+        SqlBridge.parquetFooterSchema(spark, f)
+      })
+
+  /** Listing read with parquet schema merge — only for additively
+    * evolved tables, whose union schema needs every file's footer. */
+  private def mergedRead(spark: SparkSession, table: String,
+                         paths: Seq[String]): DataFrame =
+    spark.read.option("mergeSchema", "true")
+      .parquet(paths.map(p => new File(table, p).getAbsolutePath): _*)
+
   private def readFilesRaw(spark: SparkSession, table: String, st: State,
                         paths: Seq[String],
                         forceSchema: Option[org.apache.spark.sql.types.StructType] = None)
@@ -494,17 +575,12 @@ object TxLog {
     // columns surface NULL, exactly the evolution contract.
     val schema0 = forceSchema.orElse {
       if (st.evolved && masked.nonEmpty && plain.nonEmpty)
-        Some(spark.read.option("mergeSchema", "true").parquet(
-          paths.map(p => new File(table, p).getAbsolutePath): _*).schema)
+        Some(mergedRead(spark, table, paths).schema)
       else None
     }
-    def rd(ps: Seq[String]): DataFrame = {
-      val abs = ps.map(p => new File(table, p).getAbsolutePath)
-      val r0 = schema0.fold(spark.read)(s0 => spark.read.schema(s0))
-      if (st.evolved && schema0.isEmpty)
-        r0.option("mergeSchema", "true").parquet(abs: _*)
-      else r0.parquet(abs: _*)
-    }
+    def rd(ps: Seq[String]): DataFrame =
+      if (st.evolved && schema0.isEmpty) mergedRead(spark, table, ps)
+      else scanFiles(spark, table, ps, schema0)
     if (masked.isEmpty) rd(paths)
     else {
       val m = rd(masked)
@@ -557,16 +633,15 @@ object TxLog {
                               pairs: Seq[(String, String)], semi: Boolean,
                               schema: StructType,
                               startSt: State): DataFrame = {
-    def abs(g: Seq[String]) = g.map(p => new File(table, p).getAbsolutePath)
     def dvJoin(raw: DataFrame): DataFrame =
       if (semi) {
         if (pairs.isEmpty) raw.filter(lit(false))
         else joinByDvPairs(spark, table, raw, pairs, "left_semi")
       } else maskByDvPairs(spark, table, raw, pairs)
     if (!startSt.mapped)
-      dvJoin(spark.read.schema(schema).parquet(abs(ps): _*))
+      dvJoin(scanFiles(spark, table, ps, Some(schema)))
     else epochGroups(st, startSt, ps).map { case (fields, g) =>
-      projectMapped(dvJoin(spark.read.parquet(abs(g): _*)),
+      projectMapped(dvJoin(scanFiles(spark, table, g)),
         fields, startSt.curFields)
     }.reduce(_ unionByName _)
   }
@@ -593,9 +668,8 @@ object TxLog {
                            st: State): DataFrame = {
     val paths = st.live.keysIterator.toSeq
     def metaScan(ps: Seq[String]): DataFrame = withSrcKey(spark, table, st,
-      (if (st.evolved) spark.read.option("mergeSchema", "true")
-       else spark.read)
-        .parquet(ps.map(p => new File(table, p).getAbsolutePath): _*)
+      (if (st.evolved) mergedRead(spark, table, ps)
+       else scanFiles(spark, table, ps))
         .withColumn("__base", srcBaseCol)
         .withColumn("__pos", col("_metadata.row_index")))
     // mapped tables: scan+project per write-schema epoch (the mapping
@@ -1359,9 +1433,9 @@ object TxLog {
       .filter(residual)
   }
 
-  /** Empty frame under the table's schema, inferred from ONE live file
-    * (never a full-table frame — its listing cost scales with the
-    * table). */
+  /** Empty frame under the table's schema, from ONE live file's footer
+    * (never a full-table frame — a DV-masked one would list its DV
+    * directories). */
   private def emptyLike(spark: SparkSession, table: String): DataFrame = {
     val st = stateAt(table, None)
     val schema =
@@ -1369,8 +1443,7 @@ object TxLog {
         StructField(n, org.apache.spark.sql.types.DataType.fromDDL(t))
       })
       else if (st.evolved) read(spark, table).schema // rare: needs the merge
-      else spark.read.parquet(
-        new File(table, st.live.keysIterator.next()).getAbsolutePath).schema
+      else scanFiles(spark, table, st.live.keysIterator.take(1).toSeq).schema
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
@@ -1517,8 +1590,7 @@ object TxLog {
     val st = stateAt(table, asOf)
     val maskedPaths = st.live.keysIterator.filter(st.dvs.contains).toSeq
     if (maskedPaths.isEmpty) return Nil
-    val totals = spark.read.parquet(
-        maskedPaths.map(p => new File(table, p).getAbsolutePath): _*)
+    val totals = scanFiles(spark, table, maskedPaths)
       .groupBy(srcBaseCol.as("__base")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val dvCounts = dvRows(spark, table, st, maskedPaths)
@@ -1658,14 +1730,12 @@ object TxLog {
         // (where _metadata is still in scope), then project each write
         // epoch to toV's field list by id
         def scanPos(ps: Seq[String]): DataFrame =
-          if (!stA.mapped) spark.read.schema(schema).parquet(
-              ps.map(p => new File(table, p).getAbsolutePath): _*)
+          if (!stA.mapped) scanFiles(spark, table, ps, Some(schema))
             .withColumn("__base", srcBaseCol)
             .withColumn("__pos", col("_metadata.row_index"))
           else epochGroups(stA, stA, ps).map { case (fields, g) =>
             projectMapped(
-              spark.read.parquet(
-                  g.map(p => new File(table, p).getAbsolutePath): _*)
+              scanFiles(spark, table, g)
                 .withColumn("__base", srcBaseCol)
                 .withColumn("__pos", col("_metadata.row_index")),
               fields, stA.curFields, keep = Seq("__base", "__pos"))

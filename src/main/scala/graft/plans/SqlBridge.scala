@@ -3,6 +3,13 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Column <-> Expression bridge. Spark 4 made these converters
   * private[sql]; custom Catalyst expressions still need them to surface
@@ -18,6 +25,27 @@ object SqlBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Parquet scan of exactly the files `index` lists, read under
+    * `dataSchema`: the relation `spark.read.parquet` builds, minus its
+    * path discovery and schema inference. Nullable like every file
+    * source relation (`StructType.asNullable` is private[spark]). */
+  def parquetScan(spark: SparkSession, index: FileIndex,
+      dataSchema: StructType): DataFrame =
+    ofRows(spark, LogicalRelation(HadoopFsRelation(index, new StructType(),
+      dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(spark)))
+
+  /** Schema of one parquet file from its footer, read on the driver —
+    * what parquet schema inference derives for a single file, without
+    * the one-task job it runs to get there. */
+  def parquetFooterSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, s.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
+  }
 
   /** Memory-manager page size for custom spillable operators (what
     * SortExec passes to UnsafeExternalRowSorter); SparkEnv.memoryManager

@@ -3060,6 +3060,118 @@ class OperatorSpec extends AnyFunSuite {
     assert(TxLog.read(spark, table, Some(0)).count() === 1)
   }
 
+  /** Jobs `body` launches, counted through a job group (suites share
+    * the SparkContext) after draining the listener bus. */
+  private def jobsIn(group: String)(body: => Unit): Long = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          { jobs.incrementAndGet(): Unit }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      body
+      org.apache.spark.sql.graftbridge.SqlBridge.waitListenerBus(spark)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+    jobs.get()
+  }
+
+  test("TxLog: snapshot reads and idempotent appends launch no listing or inference job") {
+    import graft.operators.TxLog
+    import spark.implicits._
+    // 40 appends put the table above Spark's 32-path parallel-discovery
+    // threshold, where a path-discovering read runs a listing job with
+    // one empty task per file, plus a footer job to infer the schema
+    val table = Engine.scratchDir("txlog_jobs_spec")
+    (0 until 40).foreach { i =>
+      TxLog.appendIdempotent(spark, Seq((i.toLong, i.toDouble)).toDF("k", "x"),
+        table, txn = s"b-$i")
+    }
+    assert(TxLog.files(table).size >= 40)
+    TxLog.read(spark, table).schema // warms the footer memo
+    val readJobs = jobsIn("spec_txlog_read") {
+      TxLog.read(spark, table).schema: Unit
+    }
+    assert(readJobs === 0L,
+      s"TxLog.read(...).schema ran $readJobs jobs on a 40-file table")
+    // the exactly-once append costs no more jobs than the write it wraps
+    val frame = Seq((100L, 1.0), (101L, 2.0)).toDF("k", "x")
+    val plainDir = Engine.scratchDir("txlog_jobs_plain")
+    val writeJobs = jobsIn("spec_plain_write") {
+      frame.write.mode("overwrite").parquet(plainDir)
+    }
+    val appendJobs = jobsIn("spec_txlog_append") {
+      TxLog.appendIdempotent(spark, frame, table, txn = "b-40"): Unit
+    }
+    assert(appendJobs <= writeJobs,
+      s"appendIdempotent ran $appendJobs jobs, a plain parquet write $writeJobs")
+    assert(TxLog.read(spark, table).count() === 42L)
+  }
+
+  test("TxLog: a live data file gone missing fails the read, never returns the rest") {
+    import graft.operators.TxLog
+    import spark.implicits._
+    // nothing lists the table directory any more, so the scan itself
+    // must notice a file the snapshot names but the disk lacks
+    val table = Engine.scratchDir("txlog_missing_spec")
+    (0 until 3).foreach { i =>
+      TxLog.append(spark, Seq((i.toLong, 1.0)).toDF("k", "x"), table)
+    }
+    assert(TxLog.read(spark, table).count() === 3L)
+    val victim = TxLog.files(table).last
+    assert(new java.io.File(table, victim).delete())
+    val e = intercept[Exception] { TxLog.read(spark, table).count() }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    val base = victim.substring(victim.lastIndexOf('/') + 1)
+    assert(msgs.exists(_.contains(base)),
+      s"the failure does not name the missing file $base: ${msgs.head}")
+  }
+
+  test("TxLog: the footer schema memo never outlives a delete-recreate at the same path") {
+    import graft.operators.TxLog
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    def rmTree(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rmTree)
+      f.delete(); ()
+    }
+    val table = Engine.scratchDir("txlog_regen_schema_spec")
+    TxLog.appendIdempotent(spark, Seq((1L, 1.0)).toDF("k", "x"), table,
+      txn = "batch-0")
+    assert(TxLog.read(spark, table).columns.toSeq === Seq("k", "x"))
+    val first = TxLog.files(table).head
+    rmTree(new java.io.File(table))
+    // the new incarnation's first data file sits at the very path the
+    // old one's did, so only the file's identity tells the schemas apart
+    val staged = Engine.scratchDir("txlog_regen_schema_stage")
+    Seq(("a", 1)).toDF("name", "n").coalesce(1)
+      .write.mode("overwrite").parquet(staged)
+    val part = new java.io.File(staged).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val dest = new java.io.File(table, first)
+    dest.getParentFile.mkdirs()
+    java.nio.file.Files.move(part.toPath, dest.toPath)
+    TxLog.commit(table, -1, Seq("add" -> first))
+    assert(TxLog.read(spark, table).schema.map(f => (f.name, f.dataType)) ===
+      Seq(("name", StringType), ("n", IntegerType)))
+    TxLog.appendIdempotent(spark, Seq(("b", 2)).toDF("name", "n"), table,
+      txn = "batch-0")
+    intercept[IllegalArgumentException] {
+      TxLog.appendIdempotent(spark, Seq((3L, 3.0)).toDF("k", "x"), table,
+        txn = "batch-1")
+    }
+    assert(TxLog.read(spark, table).as[(String, Int)].collect().toSet ===
+      Set(("a", 1), ("b", 2)))
+  }
+
   test("TxLog streaming source: incremental resume, exactly-once mirror, COW guard") {
     import graft.operators.TxLog
     import spark.implicits._
