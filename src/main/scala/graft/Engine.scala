@@ -143,6 +143,12 @@ object Engine {
         classOf[graft.io.GraftLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.io.GraftLocalFs].getName)
+      // Generated-code cache: Spark's 100 classes is below a repeated
+      // mix's working set (the corpus reuses ~3.7k classes, ~8 KB
+      // metaspace + ~32 KB heap each), and a too-small LRU recompiles
+      // every class every pass. Static: read once per JVM at the first
+      // codegen; getOrCreate over an existing SparkContext keeps 100.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
     val spark = extraConfs.foldLeft(builder0) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()

@@ -63,4 +63,26 @@ class CorpusSpec extends AnyFunSuite {
     assert(math.abs(builtin.getDouble(0) - math.sqrt(global)) < 1e-6)
     assert(builtin.getDouble(1) > -1.0 && builtin.getDouble(1) < 1.0)
   }
+
+  test("a repeated mix above Spark's 100-class codegen cache compiles once") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // 150 distinct generated sources; the salt keeps them new to this
+    // JVM whatever ran before. An LRU of 100 over a cyclic mix of 150
+    // evicts every class before its reuse, so pass 2 would recompile
+    // all of them.
+    val salt = System.nanoTime() & 0xffffffL
+    val mix = (1 to 150).map(k => (k, s"id * $k + $salt"))
+    def pass(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      mix.foreach { case (k, e) =>
+        val got = spark.range(8).selectExpr(e).collect().map(_.getLong(0))
+        assert(got.toSeq === (0L until 8L).map(_ * k + salt))
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val cold = pass()
+    val warm = pass()
+    assert(cold >= 150, s"cold pass compiled only $cold classes")
+    assert(warm <= 5, s"warm pass recompiled $warm of $cold classes")
+  }
 }
